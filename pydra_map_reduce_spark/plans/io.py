@@ -239,8 +239,7 @@ def scan_agg_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     s2 = _V2_SESSIONS.get(app)
     if s2 is None:
         # Evict only entries whose SparkContext is actually STOPPED
-        # (the _IVF_SERVE_CACHE liveness pattern) — clearing
-        # unconditionally would discard a live sibling SessionState
+        # — clearing unconditionally would discard a live sibling SessionState
         # whenever two live apps alternate calls in one process,
         # reintroducing the per-invocation rebuild this cache exists
         # to avoid.

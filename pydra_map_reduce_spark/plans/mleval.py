@@ -20,7 +20,7 @@ from ..operators.textops import (
     round_half_up,
     signed_round_half_up,
 )
-from ..sources.tables import load_table
+from ..sources.tables import load_table, session_cached
 from .registry import query
 
 
@@ -472,60 +472,29 @@ def _linear_scored(d: DataFrame) -> DataFrame:
 # linear_quality_score, pr_curve, quality_classifier_gate,
 # platt_scaling, isotonic_calibration, ece/calibration consumers)
 # rebuilt them per call before r14. Both frames are doc-sized and
-# narrow (a few MB at sf0.1); lifecycle identical to the other
-# session caches.
-_GOPHER_FLAGS_CACHE: dict = {}
-_LSCORED_CACHE: dict = {}
-
-
+# narrow (a few MB at sf0.1).
 def _gopher_flags_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.storagelevel import StorageLevel
-
-    from ..operators.dedup import _spread
-    from ..sources.tables import (
-        _fixture_key,
-        prune_stale_session_entries,
-        session_cache_hit,
+    return session_cached(
+        spark, sf_dir, "gopher_flags", ("documents",),
+        lambda s, d: _persisted_doc_frame(_gopher_flags, s, d),
     )
-
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _fixture_key(f"{sf_dir}/documents.parquet"),
-    )
-    fl = session_cache_hit(_GOPHER_FLAGS_CACHE, key)
-    if fl is None:
-        prune_stale_session_entries(_GOPHER_FLAGS_CACHE, key, lambda e: e)
-        fl = _gopher_flags(
-            _spread(load_table(spark, sf_dir, "documents"))
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        _GOPHER_FLAGS_CACHE[key] = fl
-    return fl
 
 
 def _linear_scored_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return session_cached(
+        spark, sf_dir, "linear_scored", ("documents",),
+        lambda s, d: _persisted_doc_frame(_linear_scored, s, d),
+    )
+
+
+def _persisted_doc_frame(derive, spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.storagelevel import StorageLevel
 
     from ..operators.dedup import _spread
-    from ..sources.tables import (
-        _fixture_key,
-        prune_stale_session_entries,
-        session_cache_hit,
-    )
 
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _fixture_key(f"{sf_dir}/documents.parquet"),
+    return derive(_spread(load_table(spark, sf_dir, "documents"))).persist(
+        StorageLevel.MEMORY_AND_DISK
     )
-    sc_ = session_cache_hit(_LSCORED_CACHE, key)
-    if sc_ is None:
-        prune_stale_session_entries(_LSCORED_CACHE, key, lambda e: e)
-        sc_ = _linear_scored(
-            _spread(load_table(spark, sf_dir, "documents"))
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        _LSCORED_CACHE[key] = sc_
-    return sc_
 
 
 @query(
@@ -978,33 +947,19 @@ def _langid_oracle(iters: int, eta: float, dim: int) -> str:
 # labels. Frames stay localCheckpoint(eager): every GD round builds a
 # new plan atop them, and re-analyzing the trigram-build lineage per
 # round measured more expensive than the rounds themselves (r13).
-_LANGID_PX_CACHE: dict = {}
-_LANGID_Y_CACHE: dict = {}
-_QCG_PX_CACHE: dict = {}
-_QCG_LAB_CACHE: dict = {}
-
-
 def _langid_features(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
-    from ..operators.dedup import _spread
-    from ..sources.tables import (
-        _fixture_key,
-        prune_stale_session_entries,
-        session_cache_hit,
+    return session_cached(
+        spark, sf_dir, "langid_features", ("documents",), _build_langid_features
     )
 
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _fixture_key(f"{sf_dir}/documents.parquet"),
-    )
-    px = session_cache_hit(_LANGID_PX_CACHE, key)
-    yl = session_cache_hit(_LANGID_Y_CACHE, key)
-    if px is not None and yl is not None:
-        return px, yl
-    prune_stale_session_entries(_LANGID_PX_CACHE, key, lambda e: e)
-    prune_stale_session_entries(_LANGID_Y_CACHE, key, lambda e: e)
+
+def _build_langid_features(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    from ..operators.dedup import _spread
+
     dim = _LANGID_DIM
     d = (
         _spread(load_table(spark, sf_dir, "documents"))
@@ -1041,32 +996,22 @@ def _langid_features(
         .localCheckpoint(eager=True)
     )
     yl = d.select("doc_id", "lang", "y").localCheckpoint(eager=True)
-    _LANGID_PX_CACHE[key] = px
-    _LANGID_Y_CACHE[key] = yl
     return px, yl
 
 
 def _qcg_features(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
-    from ..operators.dedup import _spread
-    from ..sources.tables import (
-        _fixture_key,
-        prune_stale_session_entries,
-        session_cache_hit,
+    return session_cached(
+        spark, sf_dir, "qcg_features", ("documents",), _build_qcg_features
     )
 
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _fixture_key(f"{sf_dir}/documents.parquet"),
-    )
-    px = session_cache_hit(_QCG_PX_CACHE, key)
-    lab = session_cache_hit(_QCG_LAB_CACHE, key)
-    if px is not None and lab is not None:
-        return px, lab
-    prune_stale_session_entries(_QCG_PX_CACHE, key, lambda e: e)
-    prune_stale_session_entries(_QCG_LAB_CACHE, key, lambda e: e)
+
+def _build_qcg_features(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    from ..operators.dedup import _spread
+
     dim = _QCG_DIM
     d = _spread(load_table(spark, sf_dir, "documents"))
     lab = (
@@ -1107,8 +1052,6 @@ def _qcg_features(
         )
         .localCheckpoint(eager=True)
     )
-    _QCG_PX_CACHE[key] = px
-    _QCG_LAB_CACHE[key] = lab
     return px, lab
 
 

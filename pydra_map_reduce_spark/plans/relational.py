@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.textops import money_sum, round_half_up
-from ..sources.tables import load_table
+from ..sources.tables import load_table, session_cached
 from .registry import query
 
 
@@ -1178,31 +1178,17 @@ def basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (order-sized rows carrying ≤7-element arrays — doc-sized class, the
 # r14 cache-payoff rule's winning side). One corpus shuffle builds it
 # once per (app, dir, fixture); every association_rules call derives
-# pairs / item counts / the basket total map-side from it. Lifecycle =
-# the standard keyed session-cache (prune on miss, LRU-bounded).
-_BRAND_SETS_CACHE: dict = {}
-
-
+# pairs / item counts / the basket total map-side from it.
 def _brand_sets_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return session_cached(
+        spark, sf_dir, "brand_sets", ("lineitem", "part"), _build_brand_sets
+    )
+
+
+def _build_brand_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.storagelevel import StorageLevel
 
-    from ..sources.tables import (
-        _fixture_key,
-        prune_stale_session_entries,
-        session_cache_hit,
-    )
-
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _fixture_key(f"{sf_dir}/lineitem.parquet"),
-        _fixture_key(f"{sf_dir}/part.parquet"),
-    )
-    sets = session_cache_hit(_BRAND_SETS_CACHE, key)
-    if sets is not None:
-        return sets
-    prune_stale_session_entries(_BRAND_SETS_CACHE, key, lambda e: e)
-    sets = (
+    return (
         load_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .join(
@@ -1216,8 +1202,6 @@ def _brand_sets_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.array_sort(F.collect_set("item")).alias("items"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    _BRAND_SETS_CACHE[key] = sets
-    return sets
 
 
 @query(
@@ -1770,6 +1754,22 @@ def quantile_bucketize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _build_apriori_baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # DISK_ONLY, not localCheckpoint: the basket frame is corpus-sized
+    # (one row per order), and the apriori heap-pin rule (r13 stress
+    # tier) keeps corpus-scaling pins off the heap
+    from pyspark.storagelevel import StorageLevel
+
+    return (
+        load_table(spark, sf_dir, "lineitem")
+        .select("l_orderkey", "l_partkey")
+        .groupBy("l_orderkey")
+        .agg(F.array_sort(F.collect_set("l_partkey")).alias("items"))
+        .filter(F.size("items") >= 2)
+        .persist(StorageLevel.DISK_ONLY)
+    )
+
+
 @query(
     "apriori_triples",
     oracle="""
@@ -1828,20 +1828,10 @@ def apriori_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus exchanges + a sort-merge join) plus a third exchange for
     # the p1⋈p2 triple-extension join; all three are gone and the
     # row-for-row identical pair/triple multisets are generated inside
-    # one projection each. DISK_ONLY, not localCheckpoint: the basket
-    # frame is corpus-sized (one row per order), and the apriori
-    # heap-pin rule (r13 stress tier) keeps corpus-scaling pins off
-    # the heap; CacheManager plan-dedup shares the pin across repeated
-    # calls, the shingle-frame lifecycle rule.
-    from pyspark.storagelevel import StorageLevel
-
-    sets = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_set("l_partkey")).alias("items"))
-        .filter(F.size("items") >= 2)
-        .persist(StorageLevel.DISK_ONLY)
+    # one projection each. The basket frame is session-cached
+    # (_build_apriori_baskets) so a fixture regeneration releases it.
+    sets = session_cached(
+        spark, sf_dir, "apriori_baskets", ("lineitem",), _build_apriori_baskets
     )
     pairs = sets.select(
         F.explode(

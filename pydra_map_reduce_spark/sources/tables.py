@@ -10,6 +10,7 @@ scan, so callers should `.select()` early and filter with Column exprs.
 from __future__ import annotations
 
 import weakref
+from typing import Callable, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -108,73 +109,6 @@ SCHEMAS: dict[str, T.StructType] = {
 TABLES = tuple(n for n in SCHEMAS if not n.startswith("_"))
 
 
-def session_cache_hit(cache, key):
-    """Recency-refreshing lookup for the session-keyed index caches:
-    a hit re-inserts the entry at the dict's tail, so insertion order
-    doubles as LRU order for the bound below. Returns the entry or
-    None."""
-    entry = cache.get(key)
-    if entry is not None:
-        cache[key] = cache.pop(key)
-    return entry
-
-
-def prune_stale_session_entries(cache, key, frame_of, max_live: int = 3) -> None:
-    """THE one lifecycle for the session-keyed index caches
-    (_IVF_SERVE_CACHE, _PQ_CB_CACHE, _PORTABLE_SH_CACHE): on a cache
-    miss, drop every entry that is STALE (same (applicationId, dir)
-    prefix as ``key`` but an older fixture identity) or DEAD (its
-    SparkContext has stopped — probed via the entry's frame, reached
-    through ``frame_of``), releasing a stale-but-live entry's storage
-    first. Three hand-rolled copies of this loop had already started
-    to drift before the r10 review factored them here.
-
-    The cache is also BOUNDED: a long-lived session sweeping many
-    fixture dirs would otherwise pin one corpus-sized MEMORY_AND_DISK
-    index per dir concurrently (the r10 advice finding). After the
-    stale/dead sweep, live same-application entries for OTHER dirs
-    are evicted least-recently-used-first until at most
-    ``max_live - 1`` remain (leaving room for the entry about to be
-    inserted). The default 3 covers the local differential's
-    sf0.001/0.01/0.1 sweep without thrash; callers hit through
-    ``session_cache_hit`` so dict order is LRU order.
-
-    ``frame_of=None`` declares the cache holds plain Python values
-    (no pinned DataFrame storage, e.g. _UNIGRAM_CACHE's fitted piece
-    dicts): the dead-session probe and the unpersist calls are
-    skipped, but the stale sweep and the LRU bound still apply — the
-    r13 advice found a raising ``lambda e: None`` probe classified
-    every such entry DEAD, so the LRU never engaged and the 3-SF
-    sweep thrashed the cache."""
-    for k2 in list(cache):
-        stale = k2[:2] == key[:2]
-        if frame_of is None:
-            dead = False
-        else:
-            try:
-                dead = (
-                    frame_of(cache[k2]).sparkSession.sparkContext._jsc
-                    is None
-                )
-            except Exception:
-                dead = True  # unreachable JVM handle == stopped session
-        if stale or dead:
-            if stale and not dead and frame_of is not None:
-                try:
-                    frame_of(cache[k2]).unpersist()
-                except Exception:
-                    pass
-            del cache[k2]
-    same_app = [k2 for k2 in cache if k2[0] == key[0]]
-    for k2 in same_app[: max(0, len(same_app) - (max_live - 1))]:
-        if frame_of is not None:
-            try:
-                frame_of(cache[k2]).unpersist()
-            except Exception:
-                pass
-        del cache[k2]
-
-
 def _fixture_key(path: str) -> tuple[str, int, float]:
     """(first part file, part count, max part mtime) identity for a
     fixture at this instant. Keying caches on the WHOLE part-file set
@@ -201,6 +135,179 @@ def _fixture_key(path: str) -> tuple[str, int, float]:
             raise FileNotFoundError(f"no parquet part files under {path}")
         return (parts[0], len(parts), max(os.path.getmtime(p) for p in parts))
     return (path, 1, os.path.getmtime(path))
+
+
+# One store for every session-cached build (see session_cached): key
+# (applicationId, sf_dir, family, params, fixture keys) -> (value,
+# checkpoint RDD ids). Dict order is LRU order.
+_SESSION_CACHE: dict[tuple, tuple[object, tuple[int, ...]]] = {}
+# (applicationId, family) -> {"hits", "misses", "evictions"}
+_SESSION_STATS: dict[tuple[str, str], dict[str, int]] = {}
+_MAX_LIVE_DIRS = 3
+_V = TypeVar("_V")
+
+
+def _frames(value) -> list[DataFrame]:
+    """The DataFrames an entry pins: the entry itself, or its top-level
+    items (a tuple of frames, an ``IvfIndex``, a (rows, frame) pair)."""
+    items = value if isinstance(value, (tuple, list)) else ()
+    return [x for x in (value, *items) if isinstance(x, DataFrame)]
+
+
+def _checkpoint_rdd(df: DataFrame):
+    """The JVM RDD behind a ``localCheckpoint``'d frame, else None."""
+    plan = df._jdf.queryExecution().analyzed()
+    return plan.rdd() if plan.getClass().getSimpleName() == "LogicalRDD" else None
+
+
+def _checkpoint_ids(value) -> tuple[int, ...]:
+    # a checkpoint with no partitions has no blocks to lose
+    rdds = [_checkpoint_rdd(df) for df in _frames(value)]
+    return tuple(r.id() for r in rdds if r is not None and r.getNumPartitions())
+
+
+def _rdd_storage(spark: SparkSession) -> dict[int, tuple[int, int, int]]:
+    """rdd id -> (cached partitions, partitions, bytes) for every RDD
+    with cached blocks, from the SparkContext's block status; no job."""
+    return {
+        i.id(): (i.numCachedPartitions(), i.numPartitions(), i.memSize() + i.diskSize())
+        for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+    }
+
+
+def _blocks_lost(spark: SparkSession, rdd_ids: tuple[int, ...]) -> bool:
+    if not rdd_ids:
+        return False
+    storage = _rdd_storage(spark)
+    return any(i not in storage or storage[i][0] < storage[i][1] for i in rdd_ids)
+
+
+def _release(value) -> None:
+    from py4j.protocol import Py4JError
+
+    for df in _frames(value):
+        try:
+            df.unpersist()
+            rdd = _checkpoint_rdd(df)
+            if rdd is not None:
+                # unpersist() leaves a localCheckpoint's blocks pinned
+                rdd.unpersist(False)
+        except Py4JError:
+            pass  # best effort: an eviction must not fail the caller's query
+
+
+def session_cached(
+    spark: SparkSession,
+    sf_dir: str,
+    family: str,
+    tables: tuple[str, ...],
+    build: Callable[..., _V],
+    *params,
+) -> _V:
+    """``build(spark, sf_dir, *params)``, built once per session and
+    fixture and then served from THE session cache.
+
+    Key: (applicationId, ``sf_dir``, ``family``, ``params``,
+    ``_fixture_key`` of every table in ``tables``), so a regenerated
+    input file, another dir or another session builds afresh. An entry
+    is whatever ``build`` returns: a frame, a tuple of frames, an
+    ``IvfIndex``, a plain dict. ``build`` chooses the storage (persist
+    level or eager ``localCheckpoint``) and materializes what it wants
+    materialized.
+
+    Hit: the entry moves to the tail of the dict (dict order is LRU
+    order) and is returned, unless one of its ``localCheckpoint`` RDDs
+    has lost blocks (cached partitions < partitions in
+    ``getRDDStorageInfo``); then it is evicted and rebuilt. The check
+    reads the SparkContext's block status and launches no Spark job. A lost
+    persisted block needs no check: Spark recomputes it from lineage.
+
+    Miss: first drop every entry of another application (one
+    SparkContext per process, so its context has stopped and its
+    storage went with it), and evict every STALE entry (same
+    application, dir and family; another fixture identity or other
+    params). Then evict the family's least recently used dirs until
+    at most ``_MAX_LIVE_DIRS - 1`` remain, so a session sweeping many
+    fixture dirs does not pin one corpus-sized entry per dir. Then
+    build and store.
+
+    Eviction releases the entry's storage: each DataFrame in the entry
+    and in its top-level items is ``unpersist()``ed and, when it is a
+    ``localCheckpoint`` (analyzed plan is a ``LogicalRDD``), its RDD is
+    unpersisted too — ``unpersist()`` alone leaves checkpoint blocks
+    pinned. A frame derived from an evicted checkpoint can no longer
+    run, so use query results before sweeping more than
+    ``_MAX_LIVE_DIRS`` dirs. ``session_cache_report`` shows what the
+    cache holds."""
+    app = spark.sparkContext.applicationId
+    key = (
+        app,
+        sf_dir,
+        family,
+        params,
+        tuple(_fixture_key(f"{sf_dir}/{t}.parquet") for t in tables),
+    )
+    stats = _SESSION_STATS.setdefault(
+        (app, family), {"hits": 0, "misses": 0, "evictions": 0}
+    )
+    hit = _SESSION_CACHE.pop(key, None)
+    if hit is not None:
+        if not _blocks_lost(spark, hit[1]):
+            _SESSION_CACHE[key] = hit
+            stats["hits"] += 1
+            return hit[0]
+        _release(hit[0])
+        stats["evictions"] += 1
+    stats["misses"] += 1
+
+    def evict(k):
+        _release(_SESSION_CACHE.pop(k)[0])
+        stats["evictions"] += 1
+
+    for k in list(_SESSION_CACHE):
+        if k[0] != app:
+            del _SESSION_CACHE[k]
+        elif k[1:3] == (sf_dir, family):
+            evict(k)
+    live = [k for k in _SESSION_CACHE if k[2] == family]
+    for k in live[: max(0, len(live) - (_MAX_LIVE_DIRS - 1))]:
+        evict(k)
+    value = build(spark, sf_dir, *params)
+    _SESSION_CACHE[key] = (value, _checkpoint_ids(value))
+    return value
+
+
+def session_cache_report(spark: SparkSession) -> dict:
+    """What the session cache holds for ``spark``'s application.
+
+    ``entries``: one dict per entry — ``family``, ``dir``, ``rdd_ids``
+    (its checkpoint RDDs and the loaded cache buffers of its persisted
+    frames) and ``bytes`` (their memory + disk size). ``families``:
+    hits, misses and evictions per family. Launches no Spark job."""
+    app = spark.sparkContext.applicationId
+    storage = _rdd_storage(spark)
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    entries = []
+    for (a, sf_dir, family, _params, _fx), (value, ckpt) in _SESSION_CACHE.items():
+        if a != app:
+            continue
+        ids = list(ckpt)
+        for df in _frames(value):
+            cached = cache_manager.lookupCachedData(df._jdf)
+            if cached.isDefined():
+                buffers = cached.get().cachedRepresentation().cacheBuilder()
+                if buffers.isCachedColumnBuffersLoaded():
+                    ids.append(buffers.cachedColumnBuffers().id())
+        entries.append(
+            {
+                "family": family,
+                "dir": sf_dir,
+                "rdd_ids": ids,
+                "bytes": sum(storage.get(i, (0, 0, 0))[2] for i in ids),
+            }
+        )
+    families = {f: dict(s) for (a, f), s in _SESSION_STATS.items() if a == app}
+    return {"entries": entries, "families": families}
 
 
 _TS_UNIT_CACHE: dict[tuple[str, int, float], str] = {}

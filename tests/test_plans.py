@@ -34,7 +34,7 @@ def _formatted(df) -> str:
 
 
 def _final_plan(plan: str) -> str:
-    """The plan text up to the first '== Initial Plan ==' marker.
+    """The plan text with every '== Initial Plan ==' section dropped.
 
     A query served from a session cache embeds the cached relation's
     ALREADY-EXECUTED AdaptiveSparkPlan, which renders its subtree twice
@@ -42,10 +42,22 @@ def _final_plan(plan: str) -> str:
     so a raw substring count over the full string double-counts every
     node of the cached build (the r14 driver verify caught
     test_gopher_rules failing exactly this way once the suite had
-    warmed the flags cache). Counting up to the first Initial-Plan
-    marker sees each operator of the effective plan exactly once, in
-    cold, cache-miss and cache-hit states alike."""
-    return plan.split("== Initial Plan ==", 1)[0]
+    warmed the flags cache). Cutting at the first marker is not enough:
+    that marker can belong to a nested cached plan, and every operator
+    of the effective plan printed after it would go uncounted. So each
+    marker drops only its own section, the lines indented deeper than
+    the marker. What is left shows each operator of the effective plan
+    exactly once, in cold, cache-miss and cache-hit states, whether or
+    not the top-level plan has run."""
+    kept, cut = [], None
+    for line in plan.splitlines():
+        col = len(line) - len(line.lstrip(" :"))
+        if cut is not None and col > cut:
+            continue
+        cut = col if "== Initial Plan ==" in line else None
+        if cut is None:
+            kept.append(line)
+    return "\n".join(kept)
 
 
 def test_dim_joins_broadcast(spark):
@@ -778,24 +790,24 @@ def test_ivf_serve_absent_query_id_raises(spark):
 
 def test_ivf_serve_reuses_trained_index(spark):
     """Two serves in one session must hit the same trained index (the
-    cache is the point of the split): the module-level cache holds
+    cache is the point of the split): the session cache holds
     exactly one entry for this (session, sf_dir) after repeated
     calls, and repeat results are identical."""
-    from pydra_map_reduce_spark.plans import vectors as V
-
-    from pydra_map_reduce_spark.sources.tables import _fixture_key
+    from pydra_map_reduce_spark.sources import tables as T
 
     a = [tuple(r) for r in REGISTRY["ivf_ann_serve"].fn(spark, SF_DIR).collect()]
     key = (
         spark.sparkContext.applicationId,
         SF_DIR,
-        _fixture_key(f"{SF_DIR}/embeddings.parquet"),
+        "ivf_index",
+        (),
+        (T._fixture_key(f"{SF_DIR}/embeddings.parquet"),),
     )
-    assert key in V._IVF_SERVE_CACHE
-    n_before = len(V._IVF_SERVE_CACHE)
+    assert key in T._SESSION_CACHE
+    n_before = len(T._SESSION_CACHE)
     b = [tuple(r) for r in REGISTRY["ivf_ann_serve"].fn(spark, SF_DIR).collect()]
     assert a == b and len(a) == 5
-    assert len(V._IVF_SERVE_CACHE) == n_before
+    assert len(T._SESSION_CACHE) == n_before
 
 
 def test_semantic_dedup_equi_joins_only(spark):
@@ -1154,7 +1166,7 @@ _LOCALCHECKPOINT_AUDIT = {
     ("plans/analytics.py", "chi2_independence"): (1, "MODEL"),
     ("plans/corpus.py", "dsir_selection"): (1, "RESULT"),
     ("plans/corpus.py", "stable_row_ids"): (1, "CONSIST"),
-    ("plans/dedup.py", "_minhash_portable_pairs"): (1, "CORPUS_N"),
+    ("plans/dedup.py", "_build_minhash_portable_pairs"): (1, "CORPUS_N"),
     ("plans/dedup.py", "bbit_minhash_error"): (1, "RESULT"),
     ("plans/dedup.py", "dedup_threshold_sweep"): (1, "CORPUS_N"),
     # lsh_band_sweep's own checkpoint was removed in r14 WP5 (it reads
@@ -1172,8 +1184,8 @@ _LOCALCHECKPOINT_AUDIT = {
     ("plans/graph.py", "recursive_cte_hops"): (1, "CORPUS_N"),
     ("plans/graph.py", "triangle_count"): (1, "RESULT"),
     ("plans/joins.py", "blocking_quality"): (1, "RESULT"),
-    ("plans/mleval.py", "_langid_features"): (2, "CORPUS_N"),
-    ("plans/mleval.py", "_qcg_features"): (2, "CORPUS_N"),
+    ("plans/mleval.py", "_build_langid_features"): (2, "CORPUS_N"),
+    ("plans/mleval.py", "_build_qcg_features"): (2, "CORPUS_N"),
     ("plans/mleval.py", "isotonic_calibration"): (1, "MODEL"),
     ("plans/mleval.py", "lang_id_train"): (1, "MODEL"),
     ("plans/mleval.py", "platt_scaling"): (2, "MODEL"),
@@ -1186,7 +1198,7 @@ _LOCALCHECKPOINT_AUDIT = {
     ("plans/streaming.py", "streaming_late_drop"): (1, "RESULT"),
     ("plans/streaming.py", "streaming_parquet_sink"): (1, "RESULT"),
     ("plans/streaming.py", "streaming_rate_source"): (1, "RESULT"),
-    ("plans/text.py", "_bigram_lm_frames"): (3, "MODEL"),
+    ("plans/text.py", "_build_bigram_lm"): (3, "MODEL"),
     ("plans/text.py", "_bpe_learn"): (2, "MODEL"),
     ("plans/text.py", "_unigram_em"): (3, "MODEL"),
     ("plans/text.py", "tfidf_doc_similarity"): (1, "CORPUS_N"),
@@ -1248,13 +1260,11 @@ def test_localcheckpoint_sites_audited():
 
 
 def test_r15_session_cached_queries_warm_call_identical(spark):
-    """The r15 session caches (bigram-LM decoder model tables, trainer
-    feature frames, association-rule basket sets) must leave every
-    consumer's SECOND call row-identical to its first — the warm path
-    reads the cached frames, the cold path builds them, and both must
-    produce the same result (the differential suite only calls each
-    query once per session, so the hit path needs this explicit
-    cover)."""
+    """Every session_cached family must leave a consumer's SECOND call
+    row-identical to its first — the warm path reads the cached
+    frames, the cold path builds them, and both must produce the same
+    result (the differential suite only calls each query once per
+    session, so the hit path needs this explicit cover)."""
     from pydra_map_reduce_spark.plans import REGISTRY as R
 
     for name in (
@@ -1269,6 +1279,20 @@ def test_r15_session_cached_queries_warm_call_identical(spark):
         "ann_batch_topk",
         "ndcg_eval",
         "negative_sample",
+        # one consumer of every other session_cached family
+        "winnowing_fingerprint",  # winnow_selection
+        "gopher_rules",  # gopher_flags
+        "linear_quality_score",  # linear_scored
+        "bpe_merges",  # bpe_learned
+        "unigram_lm_tokens",  # unigram_lm
+        "ivf_ann_serve",  # ivf_index
+        "pq_recall",  # pq_codebooks
+        "lsh_recall",  # portable_shingles, portable_sigs_cand
+        "dedup_clusters_minhash",  # portable_pairs, minhash_labels
+        "dedup_best_quality",  # cluster_labels
+        "minhash_lsh_neardup",  # xxhash_sigs_cand
+        "lpa_communities",  # sp_edges
+        "triangle_count",  # copurchase_edges
     ):
         fn = R[name].fn
         a = sorted([tuple(r) for r in fn(spark, SF_DIR).collect()], key=repr)
